@@ -186,7 +186,7 @@ object SparkEntry {
     * run's input dir — directory metadata instead of a recompute and
     * rewrite per rep. `build` is by-name: only a stale/missing staging
     * evaluates it. */
-  private def stagedInput(s: SparkSession, tag: String, dir: String,
+  private def stagedInput(tag: String, dir: String,
       format: String = "parquet")(build: => DataFrame): String = {
     val path = scratch(tag + "_staged", dir)
     val marker = java.nio.file.Paths.get(path + "_OK")
@@ -263,7 +263,7 @@ object SparkEntry {
     * pins batch-1 part-file names; regenerated inputs must restage the
     * checkpoint) — /tmp outlives code, and a semantics change must
     * restage, not silently reuse. */
-  private def stagedStreamState(s: SparkSession, tag: String, dir: String,
+  private def stagedStreamState(tag: String, dir: String,
       extraStamp: String, capture: Seq[(String, String)])(
       runBatch1: => Unit): StagedStream = {
     val root = scratch(tag + "_staged", dir)
@@ -883,10 +883,9 @@ object SparkEntry {
         .select(col("csize")).orderBy(col("csize"))
     }),
 
-    // GraphX PageRank over the ref graph (no SQL oracle: iterative float)
-    // fixed-iteration PageRank (static iteration count → the oracle
-    // unrolls the identical iterations as chained SQL CTEs; the
-    // tolerance-based GraphX variant stays as RefGraph.pageRank API).
+    // fixed-iteration PageRank over the ref graph (static iteration
+    // count → the oracle unrolls the identical iterations as chained SQL
+    // CTEs).
     // resetProb 0.25 is DYADIC: with this graph's out-degrees of 1 every
     // intermediate rank is an exact binary fraction, so message-sum
     // ORDER cannot perturb the result and Spark and DuckDB agree bitwise
@@ -1353,8 +1352,8 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"),
           col("ts").cast("timestamp").as("ts")).localCheckpoint(true)
       val batches = Seq(
-        stagedInput(s, "q95b1", dir)(evs),
-        stagedInput(s, "q95b2", dir)({
+        stagedInput("q95b1", dir)(evs),
+        stagedInput("q95b2", dir)({
           val maxTs = evs.agg(max(col("ts"))).head.getTimestamp(0)
           Seq((-1L, -1L,
               new java.sql.Timestamp(maxTs.getTime + 7200 * 1000L)))
@@ -1375,7 +1374,7 @@ object SparkEntry {
       // a function of the sf dir: run ONCE per (tag, sf); each rep
       // restores the world and executes only the close-everything
       // batch whose emissions ARE the session semantics under test
-      val staged = stagedStreamState(s, "q95s1", dir,
+      val staged = stagedStreamState("q95s1", dir,
         "sessv1 " + s"b1=${treeFingerprint(batches(0))}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
         for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
@@ -1752,8 +1751,8 @@ object SparkEntry {
           col("ts").cast("timestamp").as("ts"), col("value"))
         .localCheckpoint(true)
       val batches = Seq(
-        stagedInput(s, "q69b1", dir)(evs),
-        stagedInput(s, "q69b2", dir)({
+        stagedInput("q69b1", dir)(evs),
+        stagedInput("q69b2", dir)({
           val maxTs = evs.agg(max(col("ts"))).head.getTimestamp(0)
           Seq((-1L, -1L, "noop",
               new java.sql.Timestamp(maxTs.getTime + 7200 * 1000L), 0.0))
@@ -1779,7 +1778,7 @@ object SparkEntry {
           .option("path", outp).option("checkpointLocation", ckpt)
           .outputMode("append").start()
       }
-      val staged = stagedStreamState(s, "q69s1", dir,
+      val staged = stagedStreamState("q69s1", dir,
         "ssjv1 " + s"b1=${treeFingerprint(batches(0))}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
         for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
@@ -1932,9 +1931,9 @@ object SparkEntry {
       // batch contents are pure functions of the sf dir — staged once,
       // hardlinked into the input dir per rep (batch 2 only after
       // batch 1 processes, so the microbatch boundary stays put)
-      val b1 = stagedInput(s, "q110b1", dir)(
+      val b1 = stagedInput("q110b1", dir)(
         docs.where(col("doc_id") % 10 === 0))
-      val b2 = stagedInput(s, "q110b2", dir) {
+      val b2 = stagedInput("q110b2", dir) {
         val off = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
         docs.where(col("doc_id") % 10 === 0)
           .select((col("doc_id") + off).as("doc_id"), col("text"))
@@ -1960,7 +1959,7 @@ object SparkEntry {
       // in the staged inputs' tree fingerprints: the checkpoint's
       // offset log pins batch-1 part-file NAMES, so regenerated inputs
       // must restage the checkpoint too.
-      val staged = stagedStreamState(s, "q110s1", dir,
+      val staged = stagedStreamState("q110s1", dir,
         "lshv2 k=64 bands=32 rpb=2 thr=0.5 intra=false " +
           s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (work, "idx"),
@@ -2099,9 +2098,9 @@ object SparkEntry {
       // %10 slice, and the same slice under offset ids): staged once
       // behind _OK stamps, hardlinked per rep — two embeddings-slice
       // parquet writes per rep become directory metadata
-      val b1 = stagedInput(s, "q124b1", dir)(
+      val b1 = stagedInput("q124b1", dir)(
         emb.where(col("vec_id") % 10 === 0))
-      val b2 = stagedInput(s, "q124b2", dir) {
+      val b2 = stagedInput("q124b2", dir) {
         val off = emb.agg(max(col("vec_id"))).head.getLong(0) + 1
         emb.where(col("vec_id") % 10 === 0)
           .select((col("vec_id") + off).as("vec_id"), col("embedding"))
@@ -2119,7 +2118,7 @@ object SparkEntry {
       // history — cell-assign + same-cell dedup + survivor append) runs
       // once per (tag, sf); reps restore its input/checkpoint/index/
       // output world and execute only the new microbatch
-      val staged = stagedStreamState(s, "q124s1", dir,
+      val staged = stagedStreamState("q124s1", dir,
         "ivfv1 cells=8 iters=0 ci=minid thr=0.45 intra=false " +
           s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (work, "idx"),
@@ -2206,9 +2205,9 @@ object SparkEntry {
       val docs = Tpch.raw(s, dir, "documents")
         .where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("n_chars"))
-      val corpus = stagedInput(s, "q170corpus_m3", dir)(
+      val corpus = stagedInput("q170corpus_m3", dir)(
         docs.where(col("doc_id") % 10 =!= 0))
-      val batch = stagedInput(s, "q170batch_m3", dir)(
+      val batch = stagedInput("q170batch_m3", dir)(
         docs.where(col("doc_id") % 10 === 0 || col("doc_id") % 10 === 5))
       val base = scratch("q170", dir)
       // the POST-APPEND index (data + manifest, upsert duplicates in
@@ -2219,7 +2218,7 @@ object SparkEntry {
       // latest-txId reconciliation + the indexed probe, LIVE. The
       // stamp carries the index format and both staged inputs' tree
       // fingerprints (regenerated inputs must restage the world).
-      val world = stagedStreamState(s, "q170world", dir,
+      val world = stagedStreamState("q170world", dir,
         extraStamp = s"fmt=${graft.ValueIndex.Fmt} txv2 " +
           s"in=${treeFingerprint(corpus)}|${treeFingerprint(batch)}",
         capture = Seq(s"$base/v" -> "v", s"$base/v_manifest" -> "vman")) {
@@ -2280,7 +2279,7 @@ object SparkEntry {
       val docs = Tpch.raw(s, dir, "documents")
         .where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("n_chars"))
-      val corpus = stagedInput(s, "q172corpus_m3", dir)(
+      val corpus = stagedInput("q172corpus_m3", dir)(
         docs.where(col("doc_id") % 10 =!= 0))
       // the planted set: corpus top-20 by (n_chars, doc_id) — a global
       // window over the staged builder only (bounded, built once); the
@@ -2290,13 +2289,13 @@ object SparkEntry {
           row_number().over(org.apache.spark.sql.expressions.Window
             .orderBy(col("n_chars").desc, col("doc_id").desc)))
         .where(col("_rk") <= 20).drop("_rk")
-      val batch = stagedInput(s, "q172batch_m3_top20dec", dir)(
+      val batch = stagedInput("q172batch_m3_top20dec", dir)(
         docs.where(col("doc_id") % 10 === 0).unionAll(
           top20(docs.where(col("doc_id") % 10 =!= 0))
             .select(col("doc_id"),
               (col("n_chars") - 1000000L).as("n_chars"))))
       val base = scratch("q172", dir)
-      val world = stagedStreamState(s, "q172world", dir,
+      val world = stagedStreamState("q172world", dir,
         extraStamp = s"fmt=${graft.ValueIndex.Fmt} top20dec " +
           s"in=${treeFingerprint(corpus)}|${treeFingerprint(batch)}",
         capture = Seq(s"$base/v" -> "v", s"$base/v_manifest" -> "vman")) {
@@ -2622,9 +2621,9 @@ object SparkEntry {
       val t = s"q180vidx_${dirTag(dir)}"
       val docs = Tpch.raw(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"))
-      val b1 = stagedInput(s, "q180b1", dir)(
+      val b1 = stagedInput("q180b1", dir)(
         docs.where(col("doc_id") % 3 === 1))
-      val b2 = stagedInput(s, "q180b2", dir)(
+      val b2 = stagedInput("q180b2", dir)(
         docs.where(col("doc_id") % 3 === 2))
       def batchStore(df: org.apache.spark.sql.DataFrame): TripleStore = {
         val sp = graft.sources.RowIngest.specFor(df, t, Seq("doc_id"),
@@ -2641,7 +2640,7 @@ object SparkEntry {
           .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
             if (!b.isEmpty) graft.ValueIndex.append(batchStore(b), t)
           }.start()
-      val staged = stagedStreamState(s, "q180s1", dir,
+      val staged = stagedStreamState("q180s1", dir,
         s"vidx fmt=${graft.ValueIndex.Fmt} nb=8 " +
           s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (work, "idx"),
@@ -2697,9 +2696,9 @@ object SparkEntry {
       val t = s"q190vidx_${dirTag(dir)}"
       val docs = Tpch.raw(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"))
-      val b1 = stagedInput(s, "q190b1", dir)(
+      val b1 = stagedInput("q190b1", dir)(
         docs.where(col("doc_id") % 3 === 1))
-      val b2 = stagedInput(s, "q190b2", dir)(
+      val b2 = stagedInput("q190b2", dir)(
         docs.where(col("doc_id") % 3 === 2))
       def batchStore(df: org.apache.spark.sql.DataFrame): TripleStore = {
         val sp = graft.sources.RowIngest.specFor(df, t, Seq("doc_id"),
@@ -2722,7 +2721,7 @@ object SparkEntry {
           }.start()
       // batch 0's valve compacts into work-g0 — that generation (plus
       // the input and checkpoint trees) IS the staged world
-      val staged = stagedStreamState(s, "q190s1", dir,
+      val staged = stagedStreamState("q190s1", dir,
         s"vidx fmt=${graft.ValueIndex.Fmt} nb=8 frag=1.5 " +
           s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
         capture = Seq((in, "in"), (ckpt, "ckpt"),
@@ -2840,12 +2839,12 @@ object SparkEntry {
           lit(batch).cast("long").as("batch"),
           lit(ts).cast("timestamp").as("ts"))
       val batches = Seq(
-        stagedInput(s, "q76b1", dir)(
+        stagedInput("q76b1", dir)(
           stamped(uniq, 1, "2024-01-01 00:00:00")),
-        stagedInput(s, "q76b2", dir)(stamped(
+        stagedInput("q76b2", dir)(stamped(
           Seq((-1L, "watermark advance sentinel")).toDF("doc_id", "text"),
           2, "2024-01-01 01:00:00")),
-        stagedInput(s, "q76b3", dir)(
+        stagedInput("q76b3", dir)(
           stamped(uniq, 3, "2024-01-01 02:00:00")))
       def feed(src: String): Unit =
         copyRec(Paths.get(src), Paths.get(in))
@@ -2863,7 +2862,7 @@ object SparkEntry {
       // (durable file sink, committed offsets) and run only the
       // watermark-expiry choreography that IS the test: the sentinel
       // advancing past T0+10min evicting state, the T0+2h re-emit
-      val staged = stagedStreamState(s, "q76s1", dir,
+      val staged = stagedStreamState("q76s1", dir,
         "fsv1 wm=10m " + s"b1=${treeFingerprint(batches(0))}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
         for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
@@ -2908,10 +2907,10 @@ object SparkEntry {
           lit(ts).cast("timestamp").as("ts"))
       // both batches are pure functions of the sf dir: staged once,
       // hardlinked per rep (copies/fresh only land after batch 1)
-      val b1 = stagedInput(s, "q103b1", dir)(withTs(
+      val b1 = stagedInput("q103b1", dir)(withTs(
         ids.select(col("doc_id"), synth("t").as("text")),
         "2024-01-01 00:00:00"))
-      val b2 = stagedInput(s, "q103b2", dir) {
+      val b2 = stagedInput("q103b2", dir) {
         // the copy text evaluates synth over the INPUT doc_id, so the
         // shifted output id carries the ORIGINAL doc's token stream
         val copies = ids.where(col("doc_id") % 3 === 0)
@@ -2946,7 +2945,7 @@ object SparkEntry {
       // (input, checkpoint, verdict output) and execute only batch 2 —
       // the copies-vs-fresh verdicts that ARE the cross-batch near-dup
       // semantics under test (q110's staging discipline)
-      val staged = stagedStreamState(s, "q103s1", dir,
+      val staged = stagedStreamState("q103s1", dir,
         "ndv2 wm=600 " + s"b1=${treeFingerprint(b1)}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
         for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
@@ -3537,14 +3536,14 @@ object SparkEntry {
           lit(ts).cast("timestamp").as("ts"),
           lit(typ).as("event_type"))
       val batches = Seq(
-        stagedInput(s, "q161b1", dir)(
+        stagedInput("q161b1", dir)(
           evts("2024-01-01 00:00:00", "view", users)
             .unionAll(evts("2024-01-01 00:01:00", "click", users))),
-        stagedInput(s, "q161b2", dir)(
+        stagedInput("q161b2", dir)(
           evts("2024-01-01 01:00:00", "view", Seq(-1L).toDF("user_id"))),
-        stagedInput(s, "q161b3", dir)(
+        stagedInput("q161b3", dir)(
           evts("2024-01-01 01:10:00", "view", Seq(-2L).toDF("user_id"))),
-        stagedInput(s, "q161b4", dir)(
+        stagedInput("q161b4", dir)(
           evts("2024-01-01 02:00:00", "view", users)
             .unionAll(evts("2024-01-01 02:01:00", "click", users))
             .unionAll(evts("2024-01-01 02:02:00", "purchase", users))))
@@ -3582,7 +3581,7 @@ object SparkEntry {
       // batches age out and restart) is a pure function of the sf dir:
       // staged once per (tag, sf); reps restore the after-batch-1
       // world and run only the eviction choreography under test
-      val staged = stagedStreamState(s, "q161s1", dir,
+      val staged = stagedStreamState("q161s1", dir,
         "fev3 within=300 wm=10m " + s"b1=${treeFingerprint(batches(0))}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
         for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
@@ -3639,15 +3638,15 @@ object SparkEntry {
           lit(status).as("status"),
           lit(ts).cast("timestamp").as("ts"))
       val batches = Seq(
-        stagedInput(s, "q162b1", dir)(
+        stagedInput("q162b1", dir)(
           batch(ids, "v1", "2024-01-01 00:00:00")),
-        stagedInput(s, "q162b2", dir)(
+        stagedInput("q162b2", dir)(
           batch(Seq(-1L).toDF("doc_id"), "sentinel",
             "2024-01-01 01:00:00")),
-        stagedInput(s, "q162b3", dir)(
+        stagedInput("q162b3", dir)(
           batch(Seq(-2L).toDF("doc_id"), "sentinel",
             "2024-01-01 01:10:00")),
-        stagedInput(s, "q162b4", dir)(
+        stagedInput("q162b4", dir)(
           batch(ids, "v1", "2024-01-01 02:00:00")))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "id BIGINT, status STRING, ts TIMESTAMP")
@@ -3675,7 +3674,7 @@ object SparkEntry {
       // watermark advancement past T0+ttl expiring batch-1 state, and
       // the re-assert at T0+2h re-emitting. The TTL timeout is
       // EVENT-time, so a staged world restored later is unaffected.
-      val staged = stagedStreamState(s, "q162s1", dir,
+      val staged = stagedStreamState("q162s1", dir,
         "ttlv1 wm=10m ttl=300 sp=4 " + s"b1=${treeFingerprint(batches(0))}",
         capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
         for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
@@ -3850,7 +3849,7 @@ object SparkEntry {
     // (tag, sf) — the operator under test is the LOAD, not the fixture
     // write the old per-rep overwrite paid.
     "q41_json_load" -> ((s, dir) => {
-      val out = stagedInput(s, "q41src", dir, format = "json")(
+      val out = stagedInput("q41src", dir, format = "json")(
         Tpch.raw(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(4))
@@ -3872,7 +3871,7 @@ object SparkEntry {
     // operator under test is the PARSE, not the fixture write.
     "q42_failable_json" -> ((s, dir) => {
       import s.implicits._
-      val out = stagedInput(s, "q42src", dir, format = "text") {
+      val out = stagedInput("q42src", dir, format = "text") {
         val bad = s.createDataset(Seq("{not json", """{"event_id": oops}"""))
         Tpch.raw(s, dir, "events")
           .select(col("event_id"), col("event_type")).toJSON.union(bad)
@@ -3897,7 +3896,7 @@ object SparkEntry {
     // The FASTA fixture is a pure function of the sf dir: staged once
     // per (tag, sf) — the operator under test is the INGEST.
     "q43_fasta" -> ((s, dir) => {
-      val out = stagedInput(s, "q43src", dir, format = "text")(
+      val out = stagedInput("q43src", dir, format = "text")(
         Tpch.raw(s, dir, "documents")
           .select(concat(lit(">doc_"), col("doc_id").cast("string"), lit(" "),
             col("source"), lit("\n"), col("text")).as("value")))
@@ -3912,7 +3911,6 @@ object SparkEntry {
 
     // S5 external map-command transform (RDD.pipe line protocol)
     "q44_map_command" -> ((s, dir) => {
-      import s.implicits._
       val lines = Tpch.raw(s, dir, "events")
         .select(col("event_id"), col("event_type")).toJSON
       val piped = graft.sources.JsonSource.mapCommand(lines, "cat")
@@ -4088,7 +4086,7 @@ object SparkEntry {
       // under test — ingest -s schema, -e match, -p pull, -o sink — is
       // corpus-size-independent, and the JSON dump feeding it is a
       // pure function of the sf dir (written once, hardlinked per rep)
-      val in = stagedInput(s, "q54in_m3", dir, format = "json")(
+      val in = stagedInput("q54in_m3", dir, format = "json")(
         Tpch.raw(s, dir, "events")
           .where(col("event_id") % 3 === 0)
           .select(col("event_id").as("ev:event_id"),
@@ -4114,7 +4112,7 @@ object SparkEntry {
     // {"$gt": ...} comparison object that parsePattern lowers to
     // MRange — the full ingest → range match → pull → JSONL sink path
     "q174_cli_range" -> ((s, dir) => {
-      val in = stagedInput(s, "q54in_m3", dir, format = "json")(
+      val in = stagedInput("q54in_m3", dir, format = "json")(
         Tpch.raw(s, dir, "events")
           .where(col("event_id") % 3 === 0)
           .select(col("event_id").as("ev:event_id"),
@@ -4134,7 +4132,7 @@ object SparkEntry {
     }),
 
     // S7 Newick tree parse → self-referential clade entities → nested pull
-    "q45_newick" -> ((s, dir) => {
+    "q45_newick" -> ((s, _) => {
       val ts = {
         val triples = graft.sources.BioFormats.newickTriples(
           s, "((A:0.1,B:0.2)AB:0.3,C:0.4)root;")

@@ -5,7 +5,6 @@ import graft.query._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** The Spark-native EAV triple store — the engine core.
   *
@@ -1165,8 +1164,8 @@ class TripleStore(
     * rejects, and an `ents` so selective the whole range holds < k
     * matches, decline (None → this fallback). */
   private def topKEids(ents: DataFrame, attr: String, desc: Boolean,
-      limit: Int, entsIsUniverse: Boolean = false,
-      pattern: Seq[(String, MVal)] = Nil): DataFrame = {
+      limit: Int, entsIsUniverse: Boolean,
+      pattern: Seq[(String, MVal)]): DataFrame = {
     val viaIndex =
       if (desc || entsIsUniverse) valueIndex.flatMap(t =>
         ValueIndex.topKEids(spark, t, attr, valueCol(attr),
@@ -1434,11 +1433,13 @@ class TripleStore(
     * join input is the frontier, not the whole closure. Naive
     * re-derivation costs O(depth·|closure|) extra joins on deep graphs;
     * this costs O(Σ|delta|). New facts = derived ∖ total (left-anti);
-    * iteration stops when every delta is empty, and a non-empty delta at
-    * `maxIters` THROWS — a silently truncated closure would look like a
-    * valid answer. Each delta/total is localCheckpoint'd to truncate
-    * lineage. `where` clauses may use IDB predicates alongside stored
-    * attrs.
+    * each stratum runs on the [[Fixpoint]] loop until every delta is
+    * empty. `maxIters` counts rounds, the seed round included; a stratum
+    * still growing after `maxIters` rounds THROWS (IllegalStateException)
+    * — so the closure of a `maxIters - 1`-hop chain completes and of a
+    * `maxIters`-hop chain throws. Each delta is localCheckpoint'd to
+    * truncate lineage. `where` clauses may use IDB predicates alongside
+    * stored attrs.
     *
     * The grammar's `take`/`sort` keys (tripl.py:583) lower exactly like
     * pullMany's: `sortBy` is one of the `find` variables, and sort+take
@@ -1613,73 +1614,43 @@ class TripleStore(
     for (s <- stratum.values.toSeq.distinct.sorted) {
       val predsS = preds.filter(stratum(_) == s)
       val rulesS = rules.filter(r => stratum(r.head._2) == s)
-      // seed round: every rule against the EMPTY same-stratum IDB — only
-      // bodies over the EDB and lower strata can produce facts; these are
-      // the depth-1 base of this stratum's closure
-      val seedIdb = totalAll ++ predsS.map(_ -> empty).toMap
-      var total: Map[String, DataFrame] = predsS.map { p =>
-        p -> rulesS.filter(_.head._2 == p)
-          .map(r => ruleDf(r, _ => seedIdb, totalAll))
-          .reduce(_ unionByName _).distinct().localCheckpoint(eager = true)
-      }.toMap
-      var delta: Map[String, DataFrame] = total
-      // unions-since-last-pin PER PREDICATE: keying the re-pin to the
-      // global round counter lets a predicate whose delta is empty on
-      // every multiple-of-8 round grow its lazy union unboundedly on
-      // deep recursions — count each predicate's own accumulated unions
-      var sincePin: Map[String, Int] = predsS.map(_ -> 0).toMap
-      var deltaSizes: Map[String, Long] =
-        delta.map { case (p, df) => p -> df.count() }
-      onIteration(iterNo, deltaSizes)
-      iterNo += 1
-      var i = 1
-      while (deltaSizes.valuesIterator.exists(_ > 0) && i < maxIters) {
-        val idbTot = totalAll ++ total
-        val next: Map[String, DataFrame] = predsS.map { p =>
-          val perLiteral = rulesS.filter(_.head._2 == p).flatMap { r =>
-            // one derivation per same-stratum IDB literal, delta-bound at
-            // that literal: any fact all of whose same-stratum inputs are
-            // old was derived in an earlier round
-            r.body.indices.filter(j => predsS.contains(r.body(j)._2)).map { j =>
-              ruleDf(r,
-                k => if (k == j) totalAll ++ delta else idbTot, totalAll)
+      // one running total PER PREDICATE, each with its own re-pin count:
+      // a predicate whose delta is empty on some rounds must not let
+      // another predicate's unions decide when its own total is pinned
+      val total =
+        predsS.map(p => p -> new Fixpoint.Total(empty, Seq("s", "o"))).toMap
+      def totals = total.map { case (p, t) => p -> t.get }
+      var delta = Map.empty[String, DataFrame]
+      val converged = Fixpoint.iterate(maxIters) { level =>
+        val idbTot = totalAll ++ totals
+        delta = predsS.map { p =>
+          val rulesP = rulesS.filter(_.head._2 == p)
+          val derived =
+            // seed round: every rule against the EMPTY same-stratum IDB —
+            // only bodies over the EDB and lower strata can produce facts;
+            // these are the depth-1 base of this stratum's closure
+            if (level == 1) rulesP.map(r => ruleDf(r, _ => idbTot, totalAll))
+            // then one derivation per same-stratum IDB literal,
+            // delta-bound at that literal: any fact all of whose
+            // same-stratum inputs are old was derived in an earlier round
+            else rulesP.flatMap { r =>
+              r.body.indices.filter(j => predsS.contains(r.body(j)._2))
+                .map { j =>
+                  ruleDf(r,
+                    k => if (k == j) totalAll ++ delta else idbTot, totalAll)
+                }
             }
-          }
-          val fresh =
-            if (perLiteral.isEmpty) empty
-            else perLiteral.reduce(_ unionByName _).distinct()
-              .join(total(p), Seq("s", "o"), "left_anti")
-              .localCheckpoint(eager = true)
-          p -> fresh
+          p -> (if (derived.isEmpty) empty
+                else total(p).delta(derived.reduce(_ unionByName _).distinct()))
         }.toMap
-        delta = next
-        deltaSizes = delta.map { case (p, df) => p -> df.count() }
-        total = predsS.map { p =>
-          p -> (if (deltaSizes(p) == 0) total(p)
-                else {
-                  // the running total unions the (already-checkpointed)
-                  // per-round deltas LAZILY — no third driver action per
-                  // round; re-pin after every 8 unions OF THIS PREDICATE
-                  // so a deep recursion's union fan-in (and the rule
-                  // joins' plan width) stays bounded
-                  val u = total(p).unionByName(delta(p))
-                  if (sincePin(p) + 1 >= 8) {
-                    sincePin = sincePin.updated(p, 0)
-                    u.localCheckpoint(eager = true)
-                  } else {
-                    sincePin = sincePin.updated(p, sincePin(p) + 1)
-                    u
-                  }
-                })
-        }.toMap
+        val deltaSizes = delta.map { case (p, df) => p -> df.count() }
+        for (p <- predsS if deltaSizes(p) > 0) total(p).add(delta(p))
         onIteration(iterNo, deltaSizes)
         iterNo += 1
-        i += 1
+        deltaSizes.valuesIterator.exists(_ > 0)
       }
-      if (deltaSizes.valuesIterator.exists(_ > 0)) throw new IllegalStateException(
-        s"datalogRules did not reach a fixpoint in $maxIters iterations — " +
-          "raise maxIters (deep recursion) or check the rules for divergence")
-      totalAll ++= total
+      Fixpoint.requireConverged("datalogRules", maxIters, converged)
+      totalAll ++= totals
     }
     // or-groups: one relation per group — union of per-branch conjunctive
     // joins projected onto the (identical, enforced) branch variable set.
@@ -1772,32 +1743,13 @@ class TripleStore(
       else es0.select($"e".as("_src"), $"vref".as("_dst"))
     ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // `visited` is a LAZY union of per-level CHECKPOINTED leaves: each
-      // level's anti-join unions ≤ maxDepth materialized blocks — no
-      // recompute, and no third per-level job re-checkpointing the
-      // running union (2 tiny jobs per level, down from 3)
-      var visited = roots.select($"e", $"e".as("root")).localCheckpoint(eager = true)
-      var frontier = visited
-      var d = 0
-      var sincePin = 0
-      while (d < p.maxDepth) {
-        val next = frontier.join(es, frontier("e") === es("_src"))
+      // the depth cap is semantics here, not a valve: a run that is still
+      // expanding at p.maxDepth just reports p.maxDepth levels
+      Fixpoint.run("recursive pull", roots.select($"e", $"e".as("root")),
+          Seq("e", "root"), p.maxDepth) { (frontier, _) =>
+        frontier.join(es, frontier("e") === es("_src"))
           .select($"_dst".as("e"), $"root").distinct()
-          .join(visited, Seq("e", "root"), "left_anti")
-          .localCheckpoint(eager = true)
-        if (next.isEmpty) return d
-        visited = visited.unionByName(next)
-        // re-pin the running union every 8 levels (the datalog loop's
-        // cadence): the anti-join otherwise plans against a union of d
-        // leaves at depth d — O(d²) plan nodes over a deep traversal
-        sincePin += 1
-        if (sincePin >= 8) {
-          visited = visited.localCheckpoint(eager = true); sincePin = 0
-        }
-        frontier = next
-        d += 1
-      }
-      d
+      }.levels
     } finally es.unpersist(blocking = false)
   }
 
@@ -1806,10 +1758,12 @@ class TripleStore(
   // ---------------------------------------------------------------------
 
   /** Entities transitively reachable from `roots` through ref edges
-    * (optionally restricted to `attrs`). Iterative BFS fixpoint with
-    * localCheckpoint per iteration to truncate lineage — the set-at-a-time
-    * analogue of pull's '...' recursion with its `_seen_entities` cycle
-    * guard (tripl.py:652-669). `maxIters` bounds runaway graphs.
+    * (optionally restricted to `attrs`). Iterative BFS fixpoint on the
+    * [[Fixpoint]] loop, localCheckpoint per level to truncate lineage —
+    * the set-at-a-time analogue of pull's '...' recursion with its
+    * `_seen_entities` cycle guard (tripl.py:652-669). A traversal still
+    * growing after `maxIters` levels THROWS (IllegalStateException) —
+    * a `maxIters - 1`-hop chain completes, a `maxIters`-hop chain throws.
     * Output: (e, root, depth) — e reachable from root in `depth` hops.
     *
     * SCALE NOTE: the visited/frontier sets are keyed by (entity, root) —
@@ -1851,7 +1805,7 @@ class TripleStore(
     roots.select($"e").distinct()
       .createOrReplaceTempView(s"${tag}_roots")
     // checkpoint the edge projection (lazily — computed at the query's
-    // first materialization, same idiom as shortestPaths/pageRank): the
+    // first materialization, same idiom as shortestPaths): the
     // UnionLoop re-executes the recursive term's subtree once per
     // level, so an un-pinned view re-derives the triple-flatten + attr
     // filter (or a caller's fabricated-edge shuffle) at every depth —
@@ -1892,8 +1846,11 @@ class TripleStore(
     * independent — batching cannot change any root's closure, only when
     * it is computed (property-tested against [[reachable]] on random
     * dense graphs, concurrent path included). A failed batch
-    * (maxFrontier trip) propagates after in-flight batches drain, so
-    * the shared edge cache is never dropped under a live job. */
+    * (maxFrontier or maxIters trip) propagates after in-flight batches
+    * drain, so the shared edge cache is never dropped under a live job.
+    * When nBatches <= batchParallelism the batches merge into ONE BFS
+    * whose valve trips only above `maxFrontier * nBatches` pairs per
+    * level — the peak state the concurrent batches would hold anyway. */
   def reachableBatched(
       roots: DataFrame,
       attrs: Option[Seq[String]] = None,
@@ -1997,57 +1954,20 @@ class TripleStore(
         es0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else es0
     try {
-    // `levels` holds one CHECKPOINTED frame per depth: the anti-join and
-    // the returned closure union those materialized leaves lazily — no
-    // recompute, and no third per-level job re-checkpointing the running
-    // union (2 tiny jobs per level, down from 3; at reachableBatched's
-    // ~1000-batch scale that is a scheduling-dead-time lever, not a nicety)
-    val root0 = roots.select($"e", $"e".as("root"), lit(0).as("depth"))
-      .localCheckpoint(eager = true)
-    var levels = List(root0)
-    var visitedKeys = root0.select($"e", $"root")
-    var frontier = root0
-    var i = 0
-    var sincePin = 0
-    var done = false
-    while (i < maxIters && !done) {
-      val next = frontier.join(es, frontier("e") === es("_src"))
-        .select($"_dst".as("e"), $"root", ($"depth" + 1).as("depth"))
-        .join(visitedKeys, Seq("e", "root"), "left_anti")
-        .groupBy($"e", $"root").agg(min($"depth").as("depth"))
-        .localCheckpoint(eager = true)
-      val frontierSize = maxFrontier match {
-        case Some(cap) =>
-          val n = next.count()
-          if (n > cap) throw new IllegalStateException(
-            s"reachable: frontier of $n (entity, root) pairs at depth ${i + 1} " +
-              s"exceeds maxFrontier=$cap — the graph is too dense for " +
-              "per-root traversal at this root-set size; batch the roots " +
-              "or raise the cap")
-          n
-        case None => if (next.isEmpty) 0L else 1L
+      // every frontier row of level d-1 has depth d-1, so each candidate
+      // of level d has depth d
+      val r = Fixpoint.run("reachable",
+          roots.select($"e", $"e".as("root"), lit(0).as("depth")),
+          Seq("e", "root"), maxIters, maxFrontier = maxFrontier) {
+        (frontier, level) =>
+          frontier.join(es, frontier("e") === es("_src"))
+            .select($"_dst".as("e"), $"root").distinct()
+            .select($"e", $"root", lit(level).as("depth"))
       }
-      if (frontierSize == 0L) done = true
-      else {
-        levels ::= next
-        visitedKeys = visitedKeys.unionByName(next.select($"e", $"root"))
-        // re-pin the running visited union every 8 levels (the datalog
-        // loop's cadence): the anti-join otherwise plans against a
-        // union of d leaves at depth d — O(d²) plan nodes over a deep
-        // traversal. The returned closure still unions the per-level
-        // leaves directly (consumed once; fan-in is linear).
-        sincePin += 1
-        if (sincePin >= 8) {
-          visitedKeys = visitedKeys.localCheckpoint(eager = true)
-          sincePin = 0
-        }
-        frontier = next
-      }
-      i += 1
-    }
-    levels.reduce(_ unionByName _)
-    // every level is checkpoint-backed, so dropping the edge cache cannot
-    // invalidate the returned result
+      Fixpoint.requireConverged("reachable", maxIters, r.converged)
+      // every level is checkpoint-backed, so dropping the edge cache
+      // cannot invalidate the returned closure
+      r.total
     } finally { if (ownCache) es.unpersist(blocking = false) }
   }
 }

@@ -1,8 +1,8 @@
 package graft.graph
 
-import graft.TripleStore
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Fixpoint, TripleStore}
+import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -49,16 +49,6 @@ object RefGraph {
     compDf.join(vertexDict(ts), Seq("vid")).select($"e", $"component")
   }
 
-  /** PageRank over the ref graph → (e, rank). */
-  def pageRank(ts: TripleStore, tol: Double = 1e-4,
-      attrs: Option[Seq[String]] = None): DataFrame = {
-    val spark = ts.spark
-    import spark.implicits._
-    val pr = build(ts, attrs).pageRank(tol)
-    pr.vertices.toDF("vid", "rank")
-      .join(vertexDict(ts), Seq("vid")).select($"e", $"rank")
-  }
-
   /** Multi-source BFS shortest HOP DISTANCE over the ref graph: dist 0
     * at the `roots` (a DataFrame with an `e` column), dist d for
     * entities first reached at frontier step d — min over all roots by
@@ -66,12 +56,13 @@ object RefGraph {
     * whose per-root state answers a different question). The
     * feature-graph primitive behind "hops from any seed entity".
     *
-    * Pure frontier iteration: each step is one equi-join of the frontier
-    * against the (deduped) edge list + one anti-join against the known
-    * set — state is O(|V|) total, localCheckpoint truncates lineage, and
-    * a frontier still alive at `maxIters` THROWS (a silently truncated
-    * BFS would look like a valid distance map). `reverse` walks edges
-    * backwards (value → referrer). Output: (e, dist). */
+    * Pure frontier iteration on the [[graft.Fixpoint]] loop: each step
+    * is one equi-join of the frontier against the (deduped) edge list +
+    * one anti-join against the known set — state is O(|V|) total,
+    * localCheckpoint truncates lineage, and a frontier still alive after
+    * `maxIters` steps THROWS (IllegalStateException): a `maxIters - 1`-hop
+    * chain completes, a `maxIters`-hop chain throws. `reverse` walks
+    * edges backwards (value → referrer). Output: (e, dist). */
   def shortestPaths(ts: TripleStore, roots: DataFrame,
       attrs: Option[Seq[String]] = None, reverse: Boolean = false,
       maxIters: Int = 20): DataFrame = {
@@ -82,38 +73,15 @@ object RefGraph {
     val es = (if (reverse) es0.select($"vref".as("src"), $"e".as("dst"))
               else es0.select($"e".as("src"), $"vref".as("dst")))
       .distinct().localCheckpoint(eager = false)
-    var known = roots.select($"e").distinct()
-      .select($"e", lit(0L).as("dist")).localCheckpoint(eager = true)
-    var frontier = known.select($"e")
-    var d = 0L
-    var sincePin = 0
-    var n = frontier.count()
-    while (n > 0 && d < maxIters) {
-      d += 1
-      val next = es.join(frontier.withColumnRenamed("e", "src"), Seq("src"))
+    val r = Fixpoint.run("shortestPaths",
+        roots.select($"e").distinct().select($"e", lit(0L).as("dist")),
+        Seq("e"), maxIters, counted = true) { (frontier, d) =>
+      es.join(frontier.select($"e".as("src")), Seq("src"))
         .select($"dst".as("e")).distinct()
-        .join(known, Seq("e"), "left_anti")
-        .localCheckpoint(eager = true)
-      n = next.count()
-      if (n > 0) {
-        // lazy union of the per-level CHECKPOINTED deltas: the anti-join
-        // unions ≤ maxIters materialized leaves — no recompute and no
-        // third per-level job re-checkpointing the running known set.
-        // Re-pin every 8 levels (the datalog loop's cadence) so a deep
-        // graph's anti-join plan fan-in stays bounded instead of
-        // growing O(d²) plan nodes over the traversal.
-        known = known.unionByName(next.select($"e", lit(d).as("dist")))
-        sincePin += 1
-        if (sincePin >= 8) {
-          known = known.localCheckpoint(eager = true); sincePin = 0
-        }
-        frontier = next.select($"e")
-      }
+        .select($"e", lit(d.toLong).as("dist"))
     }
-    if (n > 0) throw new IllegalStateException(
-      s"shortestPaths frontier still alive after $maxIters iterations — " +
-        "raise maxIters (deep graph) or check for unexpected edges")
-    known
+    Fixpoint.requireConverged("shortestPaths", maxIters, r.converged)
+    r.total
   }
 
   /** Fixed-iteration PageRank as pure DataFrame joins, with EXACTLY the
@@ -121,8 +89,8 @@ object RefGraph {
     * (vertices with no in-edges hold at `reset`; dangling mass is
     * dropped, as in GraphX). Fully Catalyst-planned — each iteration is
     * one equi-join + one shuffle-on-dst aggregation, AQE-broadcastable —
-    * and, unlike the tolerance-based GraphX variant, the iteration count
-    * is static, so the result is reproducible in plain SQL (the q17
+    * and, unlike a tolerance-stopped iteration, the iteration count is
+    * static, so the result is reproducible in plain SQL (the q17
     * oracle unrolls the same iterations as chained CTEs). localCheckpoint
     * per iteration truncates lineage, same as the reachability fixpoint. */
   def pageRankStatic(ts: TripleStore, iters: Int = 4,

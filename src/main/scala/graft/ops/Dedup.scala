@@ -502,7 +502,7 @@ object Dedup {
     // checkpointing so only the small verified pair set is materialized.
     // This candidates-only surface exists for tests and for callers with
     // their own verification metric.
-    CacheScope.releasing(pref)(ppJoinPairs(pref, idCol, threshold, blockCols))
+    CacheScope.releasing(pref)(ppJoinPairs(pref, threshold, blockCols))
   }
 
   /** The production PPJoin surface: prefix-filtered candidates + exact
@@ -515,7 +515,7 @@ object Dedup {
     val pref = ppJoinPrefixes(sh, idCol, shCol, threshold, blockCols)
     CacheScope.releasing(pref) {
       jaccardVerifySh(sh,
-        ppJoinPairs(pref, idCol, threshold, blockCols),
+        ppJoinPairs(pref, threshold, blockCols),
         idCol, threshold, shCol = shCol)
     }
   }
@@ -538,8 +538,8 @@ object Dedup {
 
   /** Candidate (id1, id2) pairs from the persisted prefix frame: one
     * equi-join on (shingle, blocks) + size-ratio prefilter + distinct. */
-  private def ppJoinPairs(pref: DataFrame, idCol: String,
-      threshold: Double, blockCols: Seq[String]): DataFrame = {
+  private def ppJoinPairs(pref: DataFrame, threshold: Double,
+      blockCols: Seq[String]): DataFrame = {
     val l = pref.toDF(("id1" +: "_n1" +: "_s" +: blockCols): _*)
     val r = pref.toDF(("id2" +: "_n2" +: "_s" +: blockCols): _*)
     l.join(r, "_s" +: blockCols)

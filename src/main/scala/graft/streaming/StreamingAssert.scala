@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.model.{AttrSchema, Triples}
+import graft.model.Triples
 import graft.sources.RowIngest
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 

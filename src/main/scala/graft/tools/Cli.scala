@@ -6,7 +6,7 @@ import graft.model.AttrSchema
 import graft.query._
 import graft.sources.{DocIngest, JsonSource}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, max}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import scala.jdk.CollectionConverters._
 
 /** The `tripl` CLI surface (cli.py:72-115) on the Spark engine:

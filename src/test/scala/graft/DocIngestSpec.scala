@@ -2,7 +2,6 @@ package graft
 
 import graft.model.Triples
 import graft.sources.{AttrMap, DocIngest}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class DocIngestSpec extends AnyFunSuite {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Layout
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class LayoutSpec extends AnyFunSuite {

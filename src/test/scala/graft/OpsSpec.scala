@@ -335,6 +335,32 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("ivfTopK: Lloyd keeps a short initial centroid whose cell never " +
+      "covers the longer dims (ragged corpus)") {
+    // the quantizer's dim comes from the FIRST sampled centroid (3 long
+    // dims); the second sampled centroid has 2 dims and its cell holds
+    // only 2-dim vectors, so no member reaches dim 3 — the fallback to
+    // the previous centroid's value must not index past its end
+    val ids = (0L until 8L)
+    val first2 = ids.toDF("vec_id")
+      .orderBy(xxhash64($"vec_id"), $"vec_id").limit(2)
+      .as[Long].collect()
+    val long = first2(0)
+    val vecs = ids.map { i =>
+      if (i == long || i % 3 == 0 && !first2.contains(i))
+        (i, Seq(1.0 + i, 0.1, 0.2))
+      else (i, Seq(0.1 * i, 1.0))
+    }
+    val df = vecs.toDF("vec_id", "embedding")
+    val q = df.where($"vec_id" < 4)
+    val exact = Similarity.bruteTopK(df, q, "vec_id", "embedding", 2)
+      .as[(Long, Long, Int)].collect().toSet
+    val ivf = Similarity.ivfTopK(df, q, "vec_id", "embedding", 2,
+      nCells = 2, nProbe = 2, iters = 2)
+      .as[(Long, Long, Int)].collect().toSet
+    assert(ivf === exact)
+  }
+
   test("recallAtK: partial and zero-hit queries score fractionally, not drop") {
     val exact = Seq((1L, 10L, 1), (1L, 11L, 2), (1L, 12L, 3),
       (2L, 20L, 1), (2L, 21L, 2))

@@ -289,7 +289,7 @@ class PropertySpec extends AnyFunSuite {
   test("property: packSequences bins == driver-computed cumulative bins") {
     val rnd = new scala.util.Random(29)
     val docs = (0 until 40).map(i =>
-      (i.toLong, (0 until (1 + rnd.nextInt(30))).map(j => "t").mkString(" ")))
+      (i.toLong, (0 until (1 + rnd.nextInt(30))).map(_ => "t").mkString(" ")))
     val cap = 37
     val got = graft.ops.TextOps.packSequences(
         docs.toDF("doc_id", "text"), "doc_id", "text", cap)
@@ -390,7 +390,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: lengthQuantiles == sort-based nearest-rank quantile") {
     val rnd = new scala.util.Random(67)
-    val docs = (0 until 60).map { i =>
+    val docs = (0 until 60).map { _ =>
       (s"g${rnd.nextInt(3)}", (0 until (1 + rnd.nextInt(30)))
         .map(_ => "t").mkString(" "))
     }
@@ -1266,7 +1266,6 @@ class PropertySpec extends AnyFunSuite {
         schema("p:t", graft.model.Triples.VStr)))
       val ts = plain.buildValueIndex(s"vidx_cjp_$trial", s"$dir/t$trial",
         Seq("p:n", "p:s"), nBuckets = 4 + rnd.nextInt(8))
-      val byId = rows.map(r => r._1 -> r).toMap
       def conjunct(): ((String, MVal), ((String, Long, String, String)) => Boolean) =
         rnd.nextInt(6) match {
           case 0 =>
@@ -1342,7 +1341,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: the ValueIndex timestamp shadow is monotone in " +
       "Spark's NTZ sort order (random micros, DST windows, extremes)") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     // the zone-map argument for timestamp attrs rests on: a <= b in
     // the order Spark sorts vts with implies shadow(a) <= shadow(b).
     // Hostile corpus: uniform random micros over ±10y around the

@@ -1,7 +1,7 @@
 package graft
 
 import graft.query.MEq
-import graft.sources.{BioFormats, DocIngest, JsonSource}
+import graft.sources.{BioFormats, JsonSource}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files

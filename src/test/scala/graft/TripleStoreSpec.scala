@@ -2,7 +2,6 @@ package graft
 
 import graft.model.{AttrSchema, Triples}
 import graft.query._
-import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -89,6 +88,24 @@ class TripleStoreSpec extends AnyFunSuite {
     val schemas = rows.map(_._2).distinct.map(a =>
       a -> AttrSchema(a, cardOne = cardOne(a), isRef = false, Triples.VStr)).toMap
     new TripleStore(spark, triples, schemas)
+  }
+
+  /** Store of `r:next` ref facts, one per (from, to) edge. */
+  def refStore(edges: Seq[(String, String)]): TripleStore = {
+    val triples = edges.map { case (x, y) => (x, "r:next", y) }
+      .toDF("e", "a", "vref")
+      .withColumn("vtype", lit(Triples.VRef))
+      .withColumn("vstr", lit(null).cast("string"))
+      .withColumn("vlong", lit(null).cast("long"))
+      .withColumn("vdbl", lit(null).cast("double"))
+      .withColumn("vbool", lit(null).cast("boolean"))
+      .withColumn("vts", lit(null).cast("timestamp_ntz"))
+      .withColumn("vbin", lit(null).cast("binary"))
+      .withColumn("txId", lit(0L))
+      .select(Triples.columns.map(col): _*)
+    new TripleStore(spark, triples, Map(
+      "r:next" -> AttrSchema("r:next", cardOne = false, isRef = true,
+        Triples.VRef)))
   }
 
   test("set semantics: re-asserting a fact is idempotent (tripl.py:78)") {
@@ -864,20 +881,7 @@ class TripleStoreSpec extends AnyFunSuite {
     // K4 on {a,b,c,d} with all roots: frontier after one hop is 12
     // (entity, root) pairs — a cap of 5 must trip with a clear message
     val vs = Seq("a", "b", "c", "d")
-    val edges = for { x <- vs; y <- vs if x != y } yield (x, "r:next", y)
-    val triples = edges.toDF("e", "a", "vref")
-      .withColumn("vtype", lit(Triples.VRef))
-      .withColumn("vstr", lit(null).cast("string"))
-      .withColumn("vlong", lit(null).cast("long"))
-      .withColumn("vdbl", lit(null).cast("double"))
-      .withColumn("vbool", lit(null).cast("boolean"))
-      .withColumn("vts", lit(null).cast("timestamp_ntz"))
-      .withColumn("vbin", lit(null).cast("binary"))
-      .withColumn("txId", lit(0L))
-      .select(Triples.columns.map(col): _*)
-    val ts = new TripleStore(spark, triples, Map(
-      "r:next" -> AttrSchema("r:next", cardOne = false, isRef = true,
-        Triples.VRef)))
+    val ts = refStore(for { x <- vs; y <- vs if x != y } yield (x, y))
     val roots = vs.toDF("e")
     val ex = intercept[IllegalStateException] {
       ts.reachable(roots, maxFrontier = Some(5L)).count()
@@ -889,22 +893,6 @@ class TripleStoreSpec extends AnyFunSuite {
 
   test("reachableCte == reachable (diamond DAG and cycle), runs as ONE " +
       "UnionLoop, and the depth bound makes cycles terminate") {
-    def refStore(edges: Seq[(String, String)]): TripleStore = {
-      val triples = edges.map { case (x, y) => (x, "r:next", y) }
-        .toDF("e", "a", "vref")
-        .withColumn("vtype", lit(Triples.VRef))
-        .withColumn("vstr", lit(null).cast("string"))
-        .withColumn("vlong", lit(null).cast("long"))
-        .withColumn("vdbl", lit(null).cast("double"))
-        .withColumn("vbool", lit(null).cast("boolean"))
-        .withColumn("vts", lit(null).cast("timestamp_ntz"))
-        .withColumn("vbin", lit(null).cast("binary"))
-        .withColumn("txId", lit(0L))
-        .select(Triples.columns.map(col): _*)
-      new TripleStore(spark, triples, Map(
-        "r:next" -> AttrSchema("r:next", cardOne = false, isRef = true,
-          Triples.VRef)))
-    }
     // diamond a→{b,c}→d→e: two paths to d — min-depth dedup must agree
     // with BFS first-visit depth
     val dia = refStore(Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"),
@@ -926,22 +914,6 @@ class TripleStoreSpec extends AnyFunSuite {
 
   test("reachableBatched == reachable on dense graphs, and turns the " +
       "maxFrontier valve into a scheduling knob") {
-    def refStore(edges: Seq[(String, String)]): TripleStore = {
-      val triples = edges.map { case (x, y) => (x, "r:next", y) }
-        .toDF("e", "a", "vref")
-        .withColumn("vtype", lit(Triples.VRef))
-        .withColumn("vstr", lit(null).cast("string"))
-        .withColumn("vlong", lit(null).cast("long"))
-        .withColumn("vdbl", lit(null).cast("double"))
-        .withColumn("vbool", lit(null).cast("boolean"))
-        .withColumn("vts", lit(null).cast("timestamp_ntz"))
-        .withColumn("vbin", lit(null).cast("binary"))
-        .withColumn("txId", lit(0L))
-        .select(Triples.columns.map(col): _*)
-      new TripleStore(spark, triples, Map(
-        "r:next" -> AttrSchema("r:next", cardOne = false, isRef = true,
-          Triples.VRef)))
-    }
     // random dense DIRECTED graph (cycles allowed): batching must return
     // exactly the unbatched closure — per-root traversals are independent
     val rnd = new scala.util.Random(31)
@@ -984,22 +956,6 @@ class TripleStoreSpec extends AnyFunSuite {
     // truncates plan lineage), and the plan the anti-join sees stays
     // bounded instead of accumulating one union leaf per level
     val n = 19
-    def refStore(edges: Seq[(String, String)]): TripleStore = {
-      val triples = edges.map { case (x, y) => (x, "r:next", y) }
-        .toDF("e", "a", "vref")
-        .withColumn("vtype", lit(Triples.VRef))
-        .withColumn("vstr", lit(null).cast("string"))
-        .withColumn("vlong", lit(null).cast("long"))
-        .withColumn("vdbl", lit(null).cast("double"))
-        .withColumn("vbool", lit(null).cast("boolean"))
-        .withColumn("vts", lit(null).cast("timestamp_ntz"))
-        .withColumn("vbin", lit(null).cast("binary"))
-        .withColumn("txId", lit(0L))
-        .select(Triples.columns.map(col): _*)
-      new TripleStore(spark, triples, Map(
-        "r:next" -> AttrSchema("r:next", cardOne = false, isRef = true,
-          Triples.VRef)))
-    }
     val ts = refStore((0 until n - 1).map(i => (s"a$i", s"a${i + 1}")))
     // per-root BFS from the head: one row per depth 0..18
     val got = ts.reachable(Seq("a0").toDF("e"))
@@ -1017,6 +973,39 @@ class TripleStoreSpec extends AnyFunSuite {
         DatalogRule(("?x", "reach", "?z"),
           Seq(("?x", "r:next", "?y"), ("?y", "reach", "?z")))))
     assert(tc.count() === (n - 1).toLong * n / 2)
+  }
+
+  test("one valve contract: maxIters = 20 completes a 19-hop chain and " +
+      "throws on a 20-hop chain (reachable, shortestPaths, datalogRules)") {
+    // converged = some step's delta came back empty within maxIters
+    // steps; a 19-hop chain needs 19 non-empty steps and an empty 20th,
+    // a 20-hop chain would need a 21st — never a truncated closure
+    val maxIters = 20
+    def chainStore(hops: Int) =
+      refStore((0 until hops).map(i => (s"a$i", s"a${i + 1}")))
+    val closure = Seq(
+      DatalogRule(("?x", "reach", "?y"), Seq(("?x", "r:next", "?y"))),
+      DatalogRule(("?x", "reach", "?z"),
+        Seq(("?x", "r:next", "?y"), ("?y", "reach", "?z"))))
+    def runAll(ts: TripleStore): Seq[Long] = Seq(
+      ts.reachable(Seq("a0").toDF("e"), maxIters = maxIters).count(),
+      graft.graph.RefGraph.shortestPaths(ts, Seq("a0").toDF("e"),
+        maxIters = maxIters).count(),
+      ts.datalogRules(Seq("?x", "?y"), Seq(("?x", "reach", "?y")), closure,
+        maxIters = maxIters).count())
+    assert(runAll(chainStore(19)) === Seq(20L, 20L, 19L * 20 / 2))
+    val deep = chainStore(20)
+    val errors = Seq[() => Any](
+      () => deep.reachable(Seq("a0").toDF("e"), maxIters = maxIters),
+      () => graft.graph.RefGraph.shortestPaths(deep, Seq("a0").toDF("e"),
+        maxIters = maxIters),
+      () => deep.datalogRules(Seq("?x", "?y"), Seq(("?x", "reach", "?y")),
+        closure, maxIters = maxIters)
+    ).map(op => intercept[IllegalStateException](op()).getMessage)
+    errors.zip(Seq("reachable", "shortestPaths", "datalogRules")).foreach {
+      case (msg, op) =>
+        assert(msg.contains(op) && msg.contains(s"maxIters=$maxIters"), msg)
+    }
   }
 
   test("store merge is set union over globally-unique eids (W5)") {
